@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 import graft.util.Tables._
 import graft.design.DesignOps
 import graft.image.ImageOps
@@ -1533,36 +1534,25 @@ object DesignImage extends QueryModule {
   // a fixed documented constant (the q65 fixed-rounds convention), not a
   // convergence loop — the replayed oracle must run the same arithmetic.
   //
-  // Scale shape: ⌈4⌉ NP-bounded joins against the NP²-bounded symmetric
-  // edge list (broadcast-class at atlas scale); one 1-row max; no
-  // window, no driver state. Isolated parcels stay 0 (dropped from the
-  // sparse product, re-attached by the parcels left join).
+  // Scale shape: the NP²-bounded pair relation pinned once (one collect),
+  // then ⌈4⌉ (A+I) steps as driver array arithmetic over the edge-1
+  // adjacency; isolated parcels keep their unit. Math.addExact throws
+  // where the engine's ANSI sum would.
 
   private val ecmSteps = 4
 
   /** ECM core from a q168-shaped (p1, p2, …, edge) relation. */
   private[graft] def eigenCentralityCore(pairs0: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val parcels = pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct()
-    val ones = pe.filter(col("edge") === 1)
-    // NP²-bounded, read every power step — pin (see louvainModules, r21)
-    val sym = graft.util.Loops.pin(ones.selectExpr("p1 AS a", "p2 AS b")
-      .union(ones.selectExpr("p2 AS a", "p1 AS b")))
-    var x = graft.util.Loops.pin(parcels.select(col("p"), lit(1L).as("x")))
-    for (_ <- 0 until ecmSteps) {
-      val nx = sym.selectExpr("a", "b AS p")
-        .join(broadcast(x), Seq("p"))
-        .groupBy(col("a").as("p")).agg(sum("x").as("nx"))
-      x = x.join(nx, Seq("p"), "left").na.fill(0L, Seq("nx"))
-        .selectExpr("p", "x + nx AS x")
-        .transform(graft.util.Loops.pin) // NP-bounded; read twice next step
-    }
-    // NP-bounded tail over the pinned vector: pin (r21)
-    graft.util.Loops.pin(x.crossJoin(broadcast(x.agg(max("x").as("mx"))))
+    val g = graft.util.DriverGraph(pairs0)
+    var x = Array.fill(g.n)(1L)
+    for (_ <- 0 until ecmSteps)
+      x = Array.tabulate(g.n)(i => g.nbr(i).foldLeft(x(i))((a, j) => Math.addExact(a, x(j))))
+    val mx = if (g.n == 0) 0L else x.max
+    g.relation(StructField("x", LongType, nullable = false),
+      StructField("mx", LongType, nullable = false))(
+      (0 until g.n).map(i => Row(g.ids(i), x(i), mx)))
       .selectExpr("p", "x AS ec_raw",
         "CASE WHEN mx > 0 THEN round(CAST(x AS DOUBLE) / mx, 6) END AS ec")
-      .orderBy("p"))
   }
 
   // ---- q204: module roles — participation coefficient + within-module z ---
@@ -1579,9 +1569,10 @@ object DesignImage extends QueryModule {
   // integer moments through the shared mean/var expression strings.
   // Connector hubs read high-PC/high-z; provincial hubs high-z/low-PC.
   //
-  // Scale shape: one NP²-bounded edge relation, two NP-bounded
-  // aggregates (per-parcel-per-module, per-module moments), broadcast
-  // joins; no window, no driver state.
+  // Scale shape: the NP²-bounded pair relation and the NP-row module
+  // assignment pinned once each; degrees, per-module counts and moments
+  // are driver array folds (exact longs, Math.*Exact where the engine's
+  // ANSI arithmetic would throw); one LocalRelation feeds the rounding.
 
   private val moduleCount = 3
 
@@ -1590,43 +1581,46 @@ object DesignImage extends QueryModule {
     * shared by q204 (fixed atlas-style assignment) and q208 (data-driven
     * label-propagation modules). */
   private[graft] def moduleRolesWith(pairs0: DataFrame,
-      modules: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val parcels = pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct()
-    val ones = pe.filter(col("edge") === 1)
-    val sym = ones.selectExpr("p1 AS p", "p2 AS q")
-      .union(ones.selectExpr("p2 AS p", "p1 AS q"))
-    // atlas-bounded tail: pins instead of localCheckpoints (see
-    // modularityCore's r21 note)
-    val mods = graft.util.Loops.pin(modules) // NP-bounded; 2 consumers
-    val km = graft.util.Loops.pin(sym
-      .join(broadcast(mods.selectExpr("p AS q", "m")), Seq("q"))
-      .groupBy("p", "m").agg(count(lit(1)).as("kin")))
-    // NP·modules-bounded; 2 consumers
-    val deg = km.groupBy("p")
-      .agg(sum("kin").as("k"), sum(expr("kin * kin")).as("skk"))
-    val own = parcels
-      .join(deg, Seq("p"), "left").na.fill(0L, Seq("k", "skk"))
-      .join(broadcast(mods), Seq("p"))
-      .join(km.selectExpr("p", "m", "kin AS k_in"), Seq("p", "m"), "left")
-      .na.fill(0L, Seq("k_in")) // NP rows; feeds moments + output
-    val mom = own.groupBy("m")
-      .agg(count(lit(1)).as("n"), sum("k_in").as("s1"),
-        sum(expr("k_in * k_in")).as("s2"))
-    graft.util.Loops.pin(own.join(broadcast(mom), Seq("m"))
-      .selectExpr("p", "CAST(m AS INT) AS module", "k", "k_in",
-        "CASE WHEN k > 0 THEN round(CAST(k * k - skk AS DOUBLE) / (k * k), 6) END AS pc",
-        s"CASE WHEN $mrVarStr > 0 THEN round((CAST(k_in AS DOUBLE) - $mrMeanStr) / sqrt($mrVarStr), 6) END AS z_within")
-      .orderBy("p"))
-  }
+      modules: DataFrame): DataFrame =
+    moduleRolesOn(graft.util.DriverGraph(pairs0), modules)
 
   /** Module-role core under q204's FIXED stand-in assignment. */
   private[graft] def moduleRolesCore(pairs0: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val parcels = pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct()
-    moduleRolesWith(pe, parcels.selectExpr("p", s"p % $moduleCount AS m"))
+    val g = graft.util.DriverGraph(pairs0)
+    moduleRolesOn(g, g.parcels.selectExpr("p", s"p % $moduleCount AS m"))
+  }
+
+  /** The Guimerà–Amaral folds over a pinned graph. A parcel without a
+    * module is left out of the output and of its neighbors' k. */
+  private def moduleRolesOn(g: graft.util.DriverGraph,
+      modules: DataFrame): DataFrame = {
+    val mods = modules.select("p", "m")
+    val mod = new Array[Any](g.n)
+    for (r <- graft.util.Loops.pinRows(mods)._2 if !r.isNullAt(0);
+         i <- g.indexOf(r.get(0))) {
+      require(mod(i) == null && !r.isNullAt(1),
+        s"module assignment needs one non-NULL m per parcel: ${r.get(0)}")
+      mod(i) = r.get(1)
+    }
+    def sq(v: Long) = Math.multiplyExact(v, v)
+    def total(vs: Iterable[Long]) = vs.foldLeft(0L)(Math.addExact)
+    // per parcel: neighbor module → edge count (kin), with multiplicity
+    val kin = Array.tabulate(g.n)(i => g.nbr(i).toSeq.flatMap(j => Option(mod(j)))
+      .groupMapReduce(identity)(_ => 1L)(Math.addExact))
+    val own = (0 until g.n).filter(mod(_) != null)
+    def kIn(i: Int) = kin(i).getOrElse(mod(i), 0L)
+    val mom = own.groupBy(i => mod(i)).view.mapValues(is => // per module: (n, s1, s2)
+      (is.size.toLong, total(is.map(kIn)), total(is.map(i => sq(kIn(i)))))).toMap
+    def long(name: String) = StructField(name, LongType, nullable = false)
+    g.relation(mods.schema("m"), long("k"), long("k_in"), long("skk"),
+      long("n"), long("s1"), long("s2"))(own.map { i =>
+      val (n, s1, s2) = mom(mod(i))
+      Row(g.ids(i), mod(i), total(kin(i).values), kIn(i),
+        total(kin(i).values.map(sq)), n, s1, s2)
+    })
+      .selectExpr("p", "CAST(m AS INT) AS module", "k", "k_in",
+        "CASE WHEN k > 0 THEN round(CAST(k * k - skk AS DOUBLE) / (k * k), 6) END AS pc",
+        s"CASE WHEN $mrVarStr > 0 THEN round((CAST(k_in AS DOUBLE) - $mrMeanStr) / sqrt($mrVarStr), 6) END AS z_within")
   }
 
   private val mrMeanStr = "CAST(s1 AS DOUBLE) / n"
@@ -1697,9 +1691,8 @@ object DesignImage extends QueryModule {
   // rounds cost NP³-bounded joins that the reclaimed LPA rounds don't
   // pay for; see SCALE.md). The synchronous update is a DETERMINISTIC
   // map F over the label relation, so the first round with
-  // lab_k = lab_{k−1} makes every later round a no-op — the Spark loop
-  // detects it with an NP-bounded diff probe per round (the q142/q199
-  // bounded-driver-probe loop shape) and stops, while the ORACLE keeps
+  // lab_k = lab_{k−1} makes every later round a no-op — the driver loop
+  // compares the label arrays after every round and stops, while the ORACLE keeps
   // its plain connNP-round unroll: its rounds past the fixed point
   // reproduce the same labels by construction, so the engines agree
   // EXACTLY whenever a fixed point is reached. Should a pathological
@@ -1714,12 +1707,11 @@ object DesignImage extends QueryModule {
   // Guimerà–Amaral PC / within-module-z kernel as q204, so the two
   // queries differ in exactly one input: who says what the modules are.
   //
-  // Scale shape: per round one edge-relation join against the NP-row
-  // label relation, an NP·labels-bounded vote aggregate, and one
-  // NP-bounded cached-diff probe; rounds = observed convergence depth
-  // (≈ graph diameter + O(1) on real graphs), ceilinged at the node
-  // count. Everything stays NP²-bounded, broadcast-class at atlas
-  // scale (the q204 argument).
+  // Scale shape: the NP²-bounded pair relation pinned once (one collect);
+  // every round is a driver array pass over the edge-1 adjacency (votes
+  // with multiplicity, the self-vote, the (count DESC, label ASC)
+  // winner); rounds = observed convergence depth (≈ graph diameter +
+  // O(1) on real graphs), ceilinged at the node count.
   //
   // Graph choice: detection (and the roles, for consistency) run on the
   // POSITIVE-tie graph r ≥ 0.2 — module detection conventionally keeps
@@ -1744,52 +1736,38 @@ object DesignImage extends QueryModule {
     * graph still runs the engines in lockstep. */
   private[graft] def lpaModules(pairs0: DataFrame,
       maxRounds: Int = 0): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val (parcels, parcelRows) = graft.util.Loops.pinRows(
-      pe.select(col("p1").as("p"))
-        .union(pe.select(col("p2").as("p"))).distinct())
-    // NP rows, driver-pinned: cap derivation + init labels, zero jobs
-    val ones = pe.filter(col("edge") === 1)
-    // NP²-bounded, read every vote round — pin (see louvainModules, r21)
-    val sym = graft.util.Loops.pin(ones.selectExpr("p1 AS p", "p2 AS q")
-      .union(ones.selectExpr("p2 AS p", "p1 AS q")))
-    val cap =
-      if (maxRounds > 0) maxRounds else math.max(1, parcelRows.length)
-    var lab = parcels.select(col("p"), col("p").as("lab"))
-    var converged = false
+    val g = graft.util.DriverGraph(pairs0)
+    val cap = if (maxRounds > 0) maxRounds else math.max(1, g.n)
+    // labels are parcel indices; index order is id order, so the
+    // smaller index wins a tie as the (count DESC, label ASC) order asks
+    var lab = Array.tabulate(g.n)(identity)
+    val votes = new Array[Int](g.n)
+    var changed = true
     var round = 0
-    while (round < cap && !converged) {
+    while (round < cap && changed) {
       round += 1
-      // The label relation is NP rows PINNED on the driver (r20: a
-      // LocalRelation broadcasts with zero jobs and carries exact tiny
-      // stats — the per-round localCheckpoint job, the isEmpty probe
-      // job, and the broadcast-build round-trip all collapse into the
-      // ONE collect that materializes the round); BROADCAST it at both
-      // join sites so the edge relation never shuffles, and take the
-      // (count DESC, label ASC) winner as ONE min(struct) aggregate —
-      // hash aggregation, no WindowExec sort.
-      val votes = sym.join(broadcast(lab.selectExpr("p AS q", "lab")), Seq("q"))
-        .select("p", "lab")
-        .unionByName(lab.select("p", "lab")) // the self-vote
-        .groupBy("p", "lab").agg(count(lit(1)).as("c"))
-      val (next, nrows) = graft.util.Loops.pinRows(votes
-        .groupBy("p")
-        .agg(min(struct(expr("-c AS nc"), col("lab"))).as("w"))
-        .select(col("p"), col("w.lab").as("lab"))
-        .join(broadcast(lab.selectExpr("p", "lab AS plab")), Seq("p"))
-        .select(col("p"), col("lab"), (col("lab") =!= col("plab")).as("chg")))
-      // fixed-point probe: a free driver-side check of the pinned rows
-      converged = !nrows.exists(_.getBoolean(2))
-      lab = next.select("p", "lab")
+      val next = Array.tabulate(g.n) { i =>
+        val voters = lab(i) +: g.nbr(i).map(j => lab(j)) // the self-vote first
+        voters.foreach(l => votes(l) += 1)
+        val w = voters.reduce((a, b) =>
+          if (votes(b) > votes(a) || votes(b) == votes(a) && b < a) b else a)
+        voters.foreach(votes(_) = 0)
+        w
+      }
+      changed = !java.util.Arrays.equals(next, lab)
+      lab = next
     }
-    lab.selectExpr("p", "CAST(lab AS INT) AS m")
+    g.relation(StructField("lab", g.pField.dataType))(
+      (0 until g.n).map(i => Row(g.ids(i), g.ids(lab(i)))))
+      .selectExpr("p", "CAST(lab AS INT) AS m")
   }
 
   def moduleLpa(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
+    // NP²-bounded pairs pinned once: both kernels index the LocalRelation
+    val pe = graft.util.Loops.pin(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
       .select(col("t"), col("x"), col("y"), col("z"),
         expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
-      .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge").localCheckpoint()
+      .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge"))
     moduleRolesWith(pe, lpaModules(pe, maxRounds = connNP))
   }
 

@@ -1338,11 +1338,14 @@ object Glm extends QueryModule {
     // base/permT are Runs·k(·PermP)-bounded; signFlipCore and maxTCore
     // each re-derived them from fl, running the whole fl×PermP expansion
     // TWICE per chain (r20 verdict item 4: 39 jobs, 71 KB plan on q157).
-    // Compute the parts once, pin the bounded relations, feed all three
-    // verdict consumers from the pins.
+    // Compute the parts once and feed all three verdict consumers from
+    // them. base/permT are checkpointed on the root session: their plans
+    // hold the first-level × PermP expansion, which a pin would run on the
+    // single-partition pin session. Only the sf tail, whose plan reads the
+    // two checkpoints, is pinned.
     val (base0, permT0) = signFlipParts(s, fl)
-    val base = graft.util.Loops.pin(base0)
-    val permT = graft.util.Loops.pin(permT0)
+    val base = base0.localCheckpoint()
+    val permT = permT0.localCheckpoint()
     val sf = graft.util.Loops.pin(
       signFlipFromParts(base, permT).select("run", "j", "t_obs", "p_perm"))
     val bh = fdrBhCore(sf).select("run", "j", "rk", "kbh", "rejected")

@@ -41,6 +41,14 @@ object Loops {
     * data-sized. */
   val PinMaxRows = 8 * 1000 * 1000
 
+  /** Edge/vertex count up to which the connected-component kernels
+    * (`DedupOps` alternating CC and label CC) pin their state and run
+    * every round as a driver-side collect; above it they keep the
+    * distributed checkpoint rounds. Their in-loop [[pinRows]] stays
+    * under the hard cap only while this cut does. */
+  val CcPinMaxRows = 200 * 1000
+  require(CcPinMaxRows < PinMaxRows, "CcPinMaxRows must stay below PinMaxRows")
+
   /** Collect a BOUNDED loop-state relation to the driver and rebuild it
     * as a driver-local relation (LocalRelation), returning the rows too.
     *

@@ -804,6 +804,81 @@ class InferenceQcSpec extends SparkSpec {
       s"derived rounds must flood the whole chain to one label: $mods")
   }
 
+  test("q208: maxRounds caps the vote rounds - the 8-node chain stops at exactly its round-2 labels") {
+    val s = spark
+    import s.implicits._
+    // round 1: every node takes min(self, neighbors) -> 0,0,1,2,3,4,5,6;
+    // round 2 repeats it over those labels -> 0,0,0,1,2,3,4,5
+    val pe = (0 until 7).map(i => (i, i + 1, 1L)).toDF("p1", "p2", "edge")
+    val mods = graft.queries.DesignImage.lpaModules(pe, maxRounds = 2)
+      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    assert(mods === Map(0 -> 0, 1 -> 0, 2 -> 0, 3 -> 1, 4 -> 2, 5 -> 3, 6 -> 4, 7 -> 5),
+      s"round-2 labels: $mods")
+  }
+
+  test("q203/q204/q208: a pair listed twice or both ways votes, steps and counts twice") {
+    val s = spark
+    import s.implicits._
+    // 0-1 listed twice, 1-2 listed both ways: adjacency 0:[1,1] 1:[0,0,2,2]
+    // 2:[1,1] — every pair carries multiplicity 2
+    val pe = Seq((0, 1, 1L), (0, 1, 1L), (1, 2, 1L), (2, 1, 1L))
+      .toDF("p1", "p2", "edge")
+    // (A+I)^4·1 with A = 2·path: [1,1,1] -> [3,5,3] -> [13,17,13]
+    // -> [47,69,47] -> [185,257,185]
+    val ec = graft.queries.DesignImage.eigenCentralityCore(pe)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(ec === Map(0 -> 185L, 1 -> 257L, 2 -> 185L), s"power steps: $ec")
+    // modules p % 3 = p: node 1 has k = 4 split 2/2 over modules 0 and 2
+    // -> PC = 1 - 2·(1/2)² = 1/2; a deduplicated edge list would read k = 2
+    val roles = graft.queries.DesignImage.moduleRolesCore(pe)
+      .collect().map(r => r.getInt(0) -> ((r.getLong(2),
+        Option(r.get(4)).map(_.asInstanceOf[Double])))).toMap
+    assert(roles(1) === ((4L, Some(0.5))) && roles(0) === ((2L, Some(0.0))),
+      s"degrees count multiplicity: $roles")
+    // one round: node 0 sees label 1 twice against its own 0 -> 1; node 1
+    // ties 0 and 2 at two votes each -> 0; node 2 sees label 1 twice -> 1
+    val m1 = graft.queries.DesignImage.lpaModules(pe, maxRounds = 1)
+      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    assert(m1 === Map(0 -> 1, 1 -> 0, 2 -> 1), s"votes count multiplicity: $m1")
+  }
+
+  test("q203/q204/q208: the driver kernels submit at most one Spark job each over a local edge list") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    val pe = (0 until 7).map(i => (i, i + 1, 1L)).toDF("p1", "p2", "edge")
+    val mods = graft.queries.DesignImage.lpaModules(pe)
+    // jobs submitted under one job group while `body` runs (a sentinel job
+    // in a second group flushes the listener bus before reading the count)
+    def jobs(body: => Unit): Int = {
+      val group = "driver-kernel-jobs"
+      val seen = new java.util.concurrent.atomic.AtomicInteger
+      val flushed = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+            case `group` => seen.incrementAndGet()
+            case "driver-kernel-jobs-flush" => flushed.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "driver kernel job count")
+        try body finally sc.clearJobGroup()
+        sc.setJobGroup("driver-kernel-jobs-flush", "listener flush")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        seen.get()
+      } finally sc.removeSparkListener(listener)
+    }
+    val lpa = jobs(graft.queries.DesignImage.lpaModules(pe).collect(): Unit)
+    val roles = jobs(graft.queries.DesignImage.moduleRolesWith(pe, mods).collect(): Unit)
+    val ecm = jobs(graft.queries.DesignImage.eigenCentralityCore(pe).collect(): Unit)
+    assert(lpa <= 1 && roles <= 1 && ecm <= 1,
+      s"jobs per kernel: lpa $lpa, roles $roles, ecm $ecm")
+  }
+
   test("q241: flexibility counts exactly the planted movers under max-overlap carry-over") {
     val s = spark
     import s.implicits._
